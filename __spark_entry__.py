@@ -29,130 +29,11 @@ def entry(spark: SparkSession) -> DataFrame:
     return catalog["q5_revenue_by_nation"].fn(spark, "/root/testdata/sf0.001")
 
 
-def _driver_certified() -> set[str]:
-    """Names already green in a prior driver ``CORRECTNESS_r*.json``.
-
-    The driver samples a fixed-size window from the front of ``queries()``
-    each round, so with stable registration order the same first entries
-    get re-certified forever.  Reading the committed correctness files and
-    ordering still-uncertified entries first rotates fresh catalog entries
-    into every round's sample window; as the certified set grows, the
-    window advances on its own.  Entries that errored or mismatched in a
-    prior round stay at the front so they get re-checked.
-    """
-    import glob
-    import json
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    done: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, rec in data.items():
-            if not isinstance(rec, dict):
-                continue
-            full_green = rec.get("rows_match") and rec.get("schema_match") and rec.get("hash_match")
-            rows_only_green = rec.get("err") == "no_oracle" and rec.get("spark_rows") is not None
-            if full_green or rows_only_green:
-                done.add(name)
-    return done
-
-
-# Entries REWRITTEN after their last driver certification (round-9
-# verdict task 5): their green rows in CORRECTNESS_r*.json predate the
-# current implementation, so they must re-enter the sample window ahead
-# of stably-certified entries.  Maintained by hand per round; remove a
-# name once a post-rewrite CORRECTNESS file certifies it.
-# Round during which the names below were last rewritten.  A CORRECTNESS
-# file from round >= _REWRITE_ROUND that certifies a listed name makes the
-# list stale (tests/test_contract.py::test_rewritten_list_not_stale fails)
-# — the name must then be pruned.
-_REWRITE_ROUND = 12
-
-_REWRITTEN_SINCE_CERT: tuple[str, ...] = (
-    # (r11 rewrites certified by CORRECTNESS_r11.json — 50 names: q3/q5/
-    # width-law relational, scalar_*2 families, etl_*, agg_corr_covar,
-    # minhash/ngram/cosine llm entries, fan-out window/join families —
-    # all pruned per this list's contract.  The round-11 verdict also
-    # flagged the old comment labeling filter_predicates_part /
-    # window_rank_customers / skew_salted_agg etc. as "gated scan
-    # fan-out": those were final-sort-sweep entries (fan-out only ever
-    # touched queries_llm/udf call sites); they are certified and pruned
-    # now, and the groups below carry their actual mechanism.)
-    #
-    # round-11 build rewrites, not yet driver-certified:
-    "llm_source_cap",         # adaptive tiny-quota path in hash_quota_select
-    "llm_stratified_sample",  # null-safe counts join (ADVICE r10)
-    "sql_lateral_topk",       # in-lateral custkey bound
-    "llm_temperature_mix",    # hash_quota_select byte-gate + histogram prefix
-    "llm_mix_rebalance",      # hash_quota_select byte-gate + histogram prefix
-    # round-12 streaming snapshot rework (driver-resident memory sink →
-    # executor-side foreachBatch parquet snapshot; result sets identical,
-    # drain machinery changed) — supersedes the r11 localCheckpoint form:
-    "stream_tumbling_counts", "stream_sliding_avg", "stream_session_windows",
-    "stream_dedup_watermark", "stream_static_join_segments",
-    "stream_stateful_user_stats", "stream_count_min_top_users",
-    "stream_minhash_dedup", "stream_stream_join", "stream_psi_drift",
-    "stream_custom_source_replay",
-    # round-12: committed avro sink output now read DISTRIBUTED via the
-    # avroplain batch reader (driver reads only the _commits log):
-    "stream_custom_sink_avro",
-    # round-11 final-sort sweep (display-only orderBy removed from
-    # fact-grain outputs), not yet driver-certified:
-    "udf_pandas_scalar", "udf_apply_in_pandas", "udf_apply_in_arrow",
-    "udf_map_in_arrow", "mm_metadata_extract", "mm_feature_extract",
-    "mm_audio_energy", "mm_frame_sample", "mm_binary_ingest",
-    "mm_resize_pipeline", "mm_wav_energy", "mm_bmp_stats",
-    "mm_phash_near_dup", "mm_audio_fingerprint_dedup",
-    "llm_embedding_near_dup", "llm_ann_lsh",
-    "llm_fingerprint", "llm_dedup_clusters", "llm_ann_ivf",
-    "llm_gopher_rules", "llm_html_strip", "llm_ann_ivf_pq",
-    "llm_pq_index_delta", "llm_semantic_dedup", "llm_pii_redaction",
-    "llm_chunk_documents", "llm_repetition_filter", "llm_decontamination",
-    "llm_unigram_logprob", "llm_perplexity_filter", "llm_dedup_canonical",
-    "llm_duplicate_spans", "llm_quality_classifier",
-    "llm_bloom_decontamination",
-    "llm_blocklist_filter", "llm_span_dedup_clean",
-    "llm_span_decontamination", "llm_bpe_encode", "llm_url_dedup_canonical",
-    "llm_ngram_novelty", "llm_pack_sequences",
-    "ts_gapfill_ffill", "ts_sessionize_batch", "ts_weighted_moving_avg",
-    "ts_rolling_anomaly", "ts_rolling_median",
-    # round-11 gated scan fan-out (guide §2.5; pqmeta.fanout_starved_scan),
-    # not yet driver-certified (several carry the sort sweep too):
-    "llm_text_stats", "llm_mojibake_detect",
-    # round-12: the fan-out GATE machinery itself was rewritten
-    # (row_groups_at_least short-circuit + memo cache), so these two
-    # r11-certified fan-out callers re-enter the window with it:
-    "llm_ngram_jaccard", "llm_ngram_containment",
-)
-
-
-def _ordered() -> list[str]:
-    """Catalog names in three tiers: never-driver-certified first, then
-    rewritten-since-last-certification, then stably-certified entries
-    (registration order preserved within each tier)."""
-    catalog = load_all()
-    certified = _driver_certified()
-    fresh = [n for n in catalog if n not in certified]
-    recert = [n for n in catalog
-              if n in certified and n in _REWRITTEN_SINCE_CERT]
-    seen = [n for n in catalog
-            if n in certified and n not in _REWRITTEN_SINCE_CERT]
-    return fresh + recert + seen
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    catalog = load_all()
-    return {name: catalog[name].fn for name in _ordered()}
+    return {name: spec.fn for name, spec in load_all().items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twin for each SQL-expressible query."""
-    catalog = load_all()
-    return {name: catalog[name].oracle for name in _ordered() if catalog[name].oracle is not None}
+    return {name: spec.oracle for name, spec in load_all().items() if spec.oracle is not None}

@@ -24,11 +24,11 @@ the zero-shuffle lambda plan wins by 2.5-2.9x. Kept deliberately; the
 repo's CodegenFallback rule (BASELINE.md) applies where the lambda IS
 the hot loop (vector math), not here.
 
-Round-10 kernel fix (tools/r10_races2.py): the weight lambda
-referenced ``F.md5(tok)`` FOUR times, and interpreted higher-order
-lambdas do not common-subexpression-eliminate — md5 ran 4× per token.
-Chaining two transforms (tokens → md5 array → weight array) binds the
-hash once per token with IDENTICAL doubles (oracle untouched):
+Round-10 kernel fix (race script: git show 4cb8d26:tools/r10_races2.py):
+the weight lambda referenced ``F.md5(tok)`` FOUR times, and interpreted
+higher-order lambdas do not common-subexpression-eliminate — md5 ran 4×
+per token. Chaining two transforms (tokens → md5 array → weight array)
+binds the hash once per token with IDENTICAL doubles (oracle untouched):
 8.04 → 5.06 s at the 64× replica, 1.35× vs the DuckDB oracle's 3.74 s.
 Counter-measurement of record: pmod(xxhash64(tok), 2001) runs 2.20 s
 (fully codegen'd hash), but DuckDB has no xxhash64 — shipping it would

@@ -77,8 +77,9 @@ def q4_priority_late_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``l_shipdate > min(o_orderdate) + 60 = 1996-03-01`` (the orders
     window is a literal), so supplying that filter by hand
     zone-map-prunes the early shipyears at the parquet scan BEFORE the
-    semi-join shuffle. 256× race of record (tools/r10_races.py):
-    plain semi 11.53 s → semi+pushdown 5.47 s (2.1×). The
+    semi-join shuffle. 256× race of record
+    (git show 4cb8d26:tools/r10_races.py): plain semi 11.53 s →
+    semi+pushdown 5.47 s (2.1×). The
     anti_semi-style collapse (EXISTS ⟺ per-order MAX(l_shipdate) >
     odate+60, partial-agg map-side) was also raced and LOST to this
     form (6.76 s): lineitem has only ~1.6 surviving lines per order, so

@@ -111,12 +111,14 @@ def parquet_row_groups(path: str) -> int:
     return sum(pq.ParquetFile(f).metadata.num_row_groups for f in _parquet_files(path))
 
 
-# (path, mtime, threshold) → bool cache for the fan-out gate probe.
+# path → (fingerprint, verdict) cache for the fan-out gate probe.
 # Metadata only (footer counts), never query results: the same
 # information Spark's own footer cache holds, memoized so repeated plan
-# builds against one table cost zero re-reads. Keyed on the directory/
-# file mtime so a regenerated table re-probes instead of reading stale.
-_RG_GATE_CACHE: dict[tuple[str, float, int], bool] = {}
+# builds against one table cost zero footer re-reads. The fingerprint is
+# (st_mtime_ns, size of a single file or part-file count of a directory,
+# threshold), so a table rewritten in place re-probes instead of reading
+# stale, and the new fingerprint replaces the old entry for that path.
+_RG_GATE_CACHE: dict[str, tuple[tuple[int, int, int], bool]] = {}
 
 
 def row_groups_at_least(path: str, threshold: int) -> bool:
@@ -128,20 +130,26 @@ def row_groups_at_least(path: str, threshold: int) -> bool:
     comparison only needs ``groups >= threshold``, so stop opening
     footers the moment the running sum crosses it (a production-scale
     table satisfies the gate within the first file or two), and
-    memoize the verdict per (path, mtime, threshold)."""
+    memoize the verdict per path under a stat-based fingerprint."""
     import pyarrow.parquet as pq
 
-    key = (path, os.stat(path).st_mtime, threshold)
-    hit = _RG_GATE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    st = os.stat(path)
+    files = _parquet_files(path)
+    fingerprint = (
+        st.st_mtime_ns,
+        st.st_size if os.path.isfile(path) else len(files),
+        threshold,
+    )
+    hit = _RG_GATE_CACHE.get(path)
+    if hit is not None and hit[0] == fingerprint:
+        return hit[1]
     groups = 0
-    for f in _parquet_files(path):
+    for f in files:
         groups += pq.ParquetFile(f).metadata.num_row_groups
         if groups >= threshold:
             break
-    _RG_GATE_CACHE[key] = groups >= threshold
-    return _RG_GATE_CACHE[key]
+    _RG_GATE_CACHE[path] = (fingerprint, groups >= threshold)
+    return groups >= threshold
 
 
 def fanout_starved_scan(df, spark, sf_dir: str, table: str):
@@ -161,8 +169,8 @@ def fanout_starved_scan(df, spark, sf_dir: str, table: str):
     but scalar_math_funcs 0.81 s → 1.15 s — fan-out rejected there).
 
     The probe short-circuits at the parallelism threshold and memoizes
-    per (path, mtime), so at scale it opens at most a handful of
-    footers once per table, not every footer per query build.
+    per path and file fingerprint, so at scale it opens at most a
+    handful of footers once per table, not every footer per query build.
 
     Unreadable/remote paths (or a missing pyarrow) degrade to the
     unchanged df — the module's graceful-degradation contract."""

@@ -3,15 +3,35 @@
 from __future__ import annotations
 
 import __spark_entry__ as entry_mod
+from data_engineering_capstone_spark.catalog import load_all
 
 
 def test_queries_oracle_keys_consistent():
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     assert qs, "catalog is empty"
-    assert set(oracles) <= set(qs)
+    # both lists follow catalog registration order
+    catalog = load_all()
+    assert list(qs) == list(catalog)
+    assert list(oracles) == [n for n, spec in catalog.items() if spec.oracle is not None]
     for name, fn in qs.items():
         assert callable(fn), name
+
+
+def test_survey_documents_every_catalog_entry():
+    """tools/coverage_check.py: SURVEY.md cites every registered entry
+    and no entry that is not registered (its findings print on failure)."""
+    import importlib
+    import os
+    import sys
+
+    tools_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    sys.path.insert(0, tools_dir)
+    try:
+        coverage_check = importlib.import_module("coverage_check")
+        assert coverage_check.main() == 0
+    finally:
+        sys.path.remove(tools_dir)
 
 
 def test_entry_smoke(spark):
@@ -115,39 +135,3 @@ def test_no_decimal_class_at_any_oracle_output_boundary(sf_dir):
         "oracle output columns that will cross Arrow as Decimal and "
         f"hash-fail at the driver: {offenders}"
     )
-
-
-def test_rewritten_list_not_stale():
-    """_REWRITTEN_SINCE_CERT must be pruned once a post-rewrite CORRECTNESS
-    file certifies a listed name (round-10 verdict nit: the r9/r10 list
-    stayed after CORRECTNESS_r10 re-certified all 17 names, wasting sample
-    slots).  A name is stale when a driver CORRECTNESS file from round >=
-    _REWRITE_ROUND shows it green."""
-    import glob
-    import json
-    import os
-    import re
-
-    here = os.path.dirname(os.path.abspath(entry_mod.__file__))
-    stale = []
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m or int(m.group(1)) < entry_mod._REWRITE_ROUND:
-            continue
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name in entry_mod._REWRITTEN_SINCE_CERT:
-            rec = data.get(name)
-            if not isinstance(rec, dict):
-                continue
-            full_green = (rec.get("rows_match") and rec.get("schema_match")
-                          and rec.get("hash_match"))
-            rows_only_green = (rec.get("err") == "no_oracle"
-                               and rec.get("spark_rows") is not None)
-            if full_green or rows_only_green:
-                stale.append((name, os.path.basename(path)))
-    assert not stale, (
-        f"prune these from _REWRITTEN_SINCE_CERT (re-certified post-rewrite): {stale}")

@@ -105,7 +105,8 @@ def test_fanout_starved_scan_gate(spark, sf_dir, tmp_path):
 def test_row_groups_gate_short_circuits_and_memoizes(spark, sf_dir, tmp_path, monkeypatch):
     """Round-12 (verdict item 4): the fan-out gate must not open every
     footer of a many-file table just to conclude 'no-op' — it stops at
-    the threshold and memoizes per (path, mtime, threshold)."""
+    the threshold and memoizes one verdict per path, re-probing when the
+    table is rewritten in place."""
     import pyarrow.parquet as pq
 
     from data_engineering_capstone_spark.sources import pqmeta
@@ -134,6 +135,12 @@ def test_row_groups_gate_short_circuits_and_memoizes(spark, sf_dir, tmp_path, mo
     opened.clear()
     assert pqmeta.row_groups_at_least(out, threshold) is True
     assert opened == []
+    # rewritten in place with one row group: the verdict follows the new
+    # files and the new fingerprint replaces the path's old entry
+    cust.coalesce(1).write.mode("overwrite").parquet(out)
+    assert pqmeta.row_groups_at_least(out, threshold) is False
+    assert opened
+    assert list(pqmeta._RG_GATE_CACHE) == [out]
     # a starved probe still answers False (single-row-group file)
     pqmeta._RG_GATE_CACHE.clear()
     assert pqmeta.row_groups_at_least(f"{sf_dir}/nation.parquet", threshold) is False
